@@ -26,8 +26,8 @@ Semantics vs ``Searcher.search`` (db_search.go:60-96, search_1.sql):
   window and participant-filtered tf do NOT apply in batch — a documented
   divergence; route proximity-sensitive queries through ``Searcher``.
 * **'-' excludes**: per-query anti-join, same contract as the interactive
-  path (exclude phrases are analyzed without the stopword rule,
-  executor.py `search_df`).
+  path (both analyze exclude phrases with ``Searcher.analyze_exclude``,
+  which skips the stopword rule).
 * **multi-word ("quoted") phrases and wildcards** are not batchable
   (they need position arrays / prefix aggregates per query); they raise
   by default or are skipped with ``on_unsupported="skip"``.
@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from letarette_spark.query.executor import bm25, bm25_idf
 from letarette_spark.query.parser import parse_query, reduce_phrases
 
 # Above this many distinct terms an isin() pruning predicate stops paying
@@ -104,11 +105,7 @@ def _analyze_one(searcher, query_id: str, text: str) -> list[tuple]:
             rows.append((query_id, i, False, t, n_inc))
     pidx = n_inc
     for p in excludes:
-        # interactive path: excludes via query_alternatives, NO stopword
-        # drop (executor.py search_df exclude loop)
-        alts = searcher.analyzer.query_alternatives(
-            p.text, synonyms=searcher.synonyms, prefix=p.wildcard
-        )
+        alts = searcher.analyze_exclude(p)
         if not alts:
             continue
         if p.wildcard or len(alts) > 1:
@@ -152,13 +149,14 @@ def _qterms_from_df(searcher, queries: DataFrame, on_unsupported: str):
         from letarette_spark.analysis.tokenizer import Analyzer
         from letarette_spark.query.executor import Searcher as _S
 
-        class _Ctx:  # the three attrs _analyze_one touches
+        class _Ctx:  # the Searcher attrs the two analyze methods touch
             pass
 
         ctx = _Ctx()
         ctx.analyzer = Analyzer(cfg)
         ctx.synonyms = synonyms
         ctx.stopwords = stopwords
+        ctx.analyze_exclude = lambda p: _S.analyze_exclude(ctx, p)
         ctx.analyze_phrase = lambda p: _S.analyze_phrase(ctx, p)
 
         for pdf in it:
@@ -238,7 +236,8 @@ def search_batch(
     )
 
     # per-(query, phrase, doc) tf: colocated-synonym alternatives sum
-    # (positions are disjoint — same identity _narrow_single_phrase uses)
+    # (positions are disjoint, so the sum equals the merged-positions
+    # count — the interactive narrow read sums them the same way)
     ph = hits.groupBy(
         "query_id", "pidx", "exclude", "n_inc", "rowid", "space", "dl"
     ).agg(F.sum("tfw").alias("tfw"))
@@ -254,15 +253,10 @@ def search_batch(
     if spaces:
         inc = inc.filter(F.col("space").isin(list(spaces)))
 
-    from letarette_spark.query.executor import B, K1
-
-    raw_idf = F.ln(
-        (F.lit(float(searcher.ndocs)) - F.col("df") + 0.5)
-        / (F.col("df") + 0.5)
+    contrib = bm25(
+        bm25_idf(F.col("df"), searcher.ndocs), F.col("tfw"), F.col("dl"),
+        searcher.avgdl,
     )
-    idf = F.when(raw_idf <= 0.0, F.lit(1e-6)).otherwise(raw_idf)
-    denom_dl = K1 * (1.0 - B + B * F.col("dl") / F.lit(searcher.avgdl))
-    contrib = idf * F.col("tfw") * (K1 + 1.0) / (F.col("tfw") + denom_dl)
 
     docs = inc.groupBy("query_id", "rowid").agg(
         F.first("space").alias("space"),

@@ -16,11 +16,23 @@ pinned by tests/test_search_rank_identity.py):
 
 with k1=1.2, b=0.75, weights title=5.0 body=1.0 (db.go:357-361); ascending
 score = best first, ties broken by rowid (FTS5 visits rowids in order).
+``bm25_idf`` and ``bm25`` below are the one implementation of these
+formulas; the interactive path, ``query/batch.py`` and ``query/wand.py``
+all score through them.
 
 NEAR semantics (empirical, matching FTS5): all include phrases must occur
 in the SAME column with a selection of one instance per phrase such that
 max(start) - min(end) - 1 <= N tokens. tf counts are NOT restricted to
 instances inside the NEAR window.
+
+Serving paths: ``Searcher.search_df`` routes a plain single-term query
+under the cap through block-max WAND (query/wand.py). Every other query
+runs one body: read each include phrase's per-doc rows, then the NEAR
+conjunction (two or more phrases), excludes, the space filter, BM25, the
+cap and ``total_hits``, and the top-k. Only the read differs: a
+single-word, non-wildcard phrase query reads the narrow
+(rowid, space, dl, tf0, tf1) posting columns (``_narrow_single_phrase``);
+all others read position arrays (``_phrase_hits``).
 
 Scale notes: per-phrase retrieval is a term-predicate scan over the
 range-partitioned postings table (file/row-group pruning on `term`);
@@ -32,9 +44,7 @@ is attached to only the final top-k rows.
 
 from __future__ import annotations
 
-import math
-from dataclasses import dataclass, field
-from functools import reduce as _reduce
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -51,6 +61,19 @@ NEAR_RANGE = 15          # db_search.go:46-50
 DEFAULT_CAP = 10000      # config.go:70
 MAX_PAGE_LIMIT = 500     # searcher.go:51-52
 MAX_PREFIX_EXPANSION = 4096  # wildcard terms resolved via the dictionary
+
+
+def bm25_idf(n: Column, ndocs: int) -> Column:
+    """FTS5's idf of a phrase found in *n* of *ndocs* documents, clamped
+    to 1e-6 when <= 0 (common phrases still score, just barely)."""
+    raw = F.ln((F.lit(float(ndocs)) - n + 0.5) / (n + 0.5))
+    return F.when(raw <= 0.0, F.lit(1e-6)).otherwise(raw)
+
+
+def bm25(idf: Column, tf: Column, dl: Column, avgdl: float) -> Column:
+    """One phrase's BM25 contribution for weighted count *tf* in a document
+    of *dl* tokens; positive — callers negate the sum (FTS5 convention)."""
+    return idf * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / F.lit(avgdl)))
 
 
 @dataclass
@@ -134,9 +157,7 @@ class Searcher:
         alternatives (primary + colocated synonyms). Stopword removal
         applies only to single-word, non-prefix phrases (snowball.c:248-262:
         a space in the phrase or the PREFIX flag disables it)."""
-        alts = self.analyzer.query_alternatives(
-            p.text, synonyms=self.synonyms, prefix=p.wildcard
-        )
+        alts = self.analyze_exclude(p)
         if (
             self.stopwords
             and not p.wildcard
@@ -146,6 +167,14 @@ class Searcher:
         ):
             return []
         return alts
+
+    def analyze_exclude(self, p: Phrase) -> list[list[str]]:
+        """Query-time analysis of a '-' exclude phrase: like
+        ``analyze_phrase`` but without the stopword rule, so excluding a
+        stopword still removes the documents that contain it."""
+        return self.analyzer.query_alternatives(
+            p.text, synonyms=self.synonyms, prefix=p.wildcard
+        )
 
     # ------------------------------------------------------------------
     def _phrase_hits(self, alts: list[list[str]], wildcard: bool) -> DataFrame:
@@ -271,10 +300,6 @@ class Searcher:
         return F.expr(f"coalesce({per_col[0]}, false) or coalesce({per_col[1]}, false)")
 
     # ------------------------------------------------------------------
-    def _idf(self, df_count: int) -> float:
-        v = math.log((self.ndocs - df_count + 0.5) / (df_count + 0.5))
-        return v if v > 0.0 else 1e-6
-
     def _near_eval(self, n_phrases: int, phrase_lens: list[int], near: int) -> Column:
         """Arrow-batched NEAR(…, near) evaluation over per-phrase position
         arrays (columns p{i}c{col}).
@@ -364,31 +389,34 @@ class Searcher:
         fast = self._wand_fast_path(inc_terms, excludes, spaces, limit, offset)
         if fast is not None:
             return fast
-        narrow = self._narrow_single_phrase(inc_terms, excludes, spaces, limit, offset)
-        if narrow is not None:
-            return narrow
 
         self._evict_cache()
-        hits = []
-        for i, (p, terms) in enumerate(inc_terms):
-            h = self._phrase_hits(terms, p.wildcard).cache()
-            self._remember(h)
-            # phrase document frequency over the whole index — kept as a
-            # 1-row DataFrame and broadcast into the scoring plan (no
-            # driver-side action per phrase)
-            df_i = h.agg(F.count(F.lit(1)).cast("double").alias(f"df_{i}"))
-            hits.append((h, df_i, len(terms)))
-
+        narrow = self._narrow_single_phrase(inc_terms)
+        if narrow is not None:
+            hits = [narrow]
+        else:
+            hits = []
+            for p, terms in inc_terms:
+                h = self._phrase_hits(terms, p.wildcard).cache()
+                self._remember(h)
+                hits.append(h)
         k = len(hits)
-        cand = hits[0][0].select(
-            "rowid",
-            "space",
-            "dl",
-            (F.col("tf0") * self.w_title + F.col("tf1") * self.w_body).alias("tfw_0"),
-            F.col("pos0").alias("p0c0"),
-            F.col("pos1").alias("p0c1"),
+        lens = [len(terms) for _p, terms in inc_terms]
+        # phrase document frequency over the whole index, taken before
+        # excludes and the space filter (FTS5's table-wide stats) — kept
+        # as a 1-row DataFrame and broadcast into the scoring plan (no
+        # driver-side action per phrase)
+        dfs = [
+            h.agg(F.count(F.lit(1)).cast("double").alias(f"df_{i}"))
+            for i, h in enumerate(hits)
+        ]
+
+        tfw = F.col("tf0") * self.w_title + F.col("tf1") * self.w_body
+        positions = (
+            [F.col("pos0").alias("p0c0"), F.col("pos1").alias("p0c1")] if k > 1 else []
         )
-        for i, (h, _n, _l) in enumerate(hits[1:], start=1):
+        cand = hits[0].select("rowid", "space", "dl", tfw.alias("tfw_0"), *positions)
+        for i, h in enumerate(hits[1:], start=1):
             hi = h.select(
                 F.col("rowid").alias("rowid_j"),
                 F.col("pos0").alias(f"p{i}c0"),
@@ -399,14 +427,10 @@ class Searcher:
         if k > 1:
             # NEAR conjunction — exact existence test in pure JVM exprs, so
             # the match count below never touches Python
-            cand = cand.filter(
-                self._cluster_exists(k, [l for _h, _n, l in hits], NEAR_RANGE)
-            )
+            cand = cand.filter(self._cluster_exists(k, lens, NEAR_RANGE))
 
         for p in excludes:
-            ex_alts = self.analyzer.query_alternatives(
-                p.text, synonyms=self.synonyms, prefix=p.wildcard
-            )
+            ex_alts = self.analyze_exclude(p)
             if not ex_alts:
                 continue
             ex = self._phrase_hits(ex_alts, p.wildcard).select("rowid")
@@ -435,25 +459,19 @@ class Searcher:
             # participant-filtered tf for scoring (Arrow UDF) — sees only
             # the checkpointed <= cap+1 rows; every row already passed the
             # JVM cluster-existence filter
-            ne = self._near_eval(k, [l for _h, _n, l in hits], NEAR_RANGE)
+            ne = self._near_eval(k, lens, NEAR_RANGE)
             cand = cand.withColumn("ne", ne).filter(F.col("ne.ok"))
             for i in range(k):
                 cand = cand.withColumn(f"tfw_{i}", F.element_at("ne.tfw", i + 1))
 
         # BM25 scoring — pure JVM arithmetic, float64 throughout; per-phrase
         # df scalars ride along as broadcast 1-row frames.
-        for i, (_h, df_i, _l) in enumerate(hits):
+        for df_i in dfs:
             cand = cand.crossJoin(F.broadcast(df_i))
-        denom_dl = K1 * (1.0 - B + B * F.col("dl") / F.lit(self.avgdl))
         score = F.lit(0.0)
         for i in range(k):
-            raw_idf = F.ln(
-                (F.lit(float(self.ndocs)) - F.col(f"df_{i}") + 0.5)
-                / (F.col(f"df_{i}") + 0.5)
-            )
-            idf = F.when(raw_idf <= 0.0, F.lit(1e-6)).otherwise(raw_idf)
-            tf = F.col(f"tfw_{i}")
-            score = score + idf * tf * (K1 + 1.0) / (tf + denom_dl)
+            idf = bm25_idf(F.col(f"df_{i}"), self.ndocs)
+            score = score + bm25(idf, F.col(f"tfw_{i}"), F.col("dl"), self.avgdl)
         # cache the scored frame (NARROW: rowid/space/score): the count
         # below materializes it once and the global sort's range sampling
         # reuses it instead of recomputing the joins/UDF
@@ -693,38 +711,20 @@ class Searcher:
         return out, total, False
 
     # ------------------------------------------------------------------
-    def _narrow_single_phrase(
-        self,
-        inc_terms: list,
-        excludes: list,
-        spaces: list[str] | None,
-        limit: int,
-        offset: int,
-    ) -> tuple[DataFrame, int, bool] | None:
-        """Positions-free fast path for single-position single-phrase
-        queries (round-3 verdict task #5: widen the fast paths beyond
-        WAND's no-space/no-exclude shape).
-
-        A one-word phrase needs no positions: tf0/tf1 are materialized
-        posting columns, so the scan reads ONLY the narrow
-        (rowid, space, dl, tf0, tf1) columns — the fat pos0/pos1 arrays
-        (the bulk of postings I/O) are never touched. Handles space
-        filters, excludes, and colocated-synonym alternatives (tf = sum
-        over alternative terms — positions are disjoint, so the sum equals
-        the merged-positions count the general path computes). Wildcards
-        and multi-word phrases fall through (they need positions).
-
-        Identical result contract to the general k==1 path: index-wide
-        phrase df (computed BEFORE the space filter, like FTS5's
-        table-wide stats), count → cap+1 rowid-order truncation when
-        capped, (-score, rowid) ordering."""
+    def _narrow_single_phrase(self, inc_terms: list) -> DataFrame | None:
+        """Positions-free read for a query of one single-word, non-wildcard
+        phrase: its (rowid, space, dl, tf0, tf1) rows from the narrow
+        posting columns — the fat pos0/pos1 arrays (the bulk of postings
+        I/O) are never touched. Colocated-synonym alternatives sum their
+        tf (positions are disjoint, so the sum equals the merged-positions
+        count ``_phrase_hits`` computes). None for every other query,
+        which ``search_df`` then reads through ``_phrase_hits``."""
         if len(inc_terms) != 1:
             return None
         p, alts = inc_terms[0]
         if p.wildcard or len(alts) != 1:
             return None
         terms = alts[0]
-        self._evict_cache()
         rows = self.index.postings_for_terms(terms).select(
             "rowid", "space", "dl", "tf0", "tf1"
         )
@@ -735,36 +735,7 @@ class Searcher:
                 F.sum("tf0").alias("tf0"),
                 F.sum("tf1").alias("tf1"),
             )
-        df_0 = rows.agg(F.count(F.lit(1)).cast("double").alias("df_0"))
-
-        for ex in excludes:
-            ex_alts = self.analyzer.query_alternatives(
-                ex.text, synonyms=self.synonyms, prefix=ex.wildcard
-            )
-            if not ex_alts:
-                continue
-            exd = self._phrase_hits(ex_alts, ex.wildcard).select("rowid")
-            rows = rows.join(exd, "rowid", "left_anti")
-        if spaces:
-            rows = rows.filter(F.col("space").isin(spaces))
-
-        rows = rows.crossJoin(F.broadcast(df_0))
-        raw_idf = F.ln(
-            (F.lit(float(self.ndocs)) - F.col("df_0") + 0.5) / (F.col("df_0") + 0.5)
-        )
-        idf = F.when(raw_idf <= 0.0, F.lit(1e-6)).otherwise(raw_idf)
-        tf = F.col("tf0") * self.w_title + F.col("tf1") * self.w_body
-        denom_dl = K1 * (1.0 - B + B * F.col("dl") / F.lit(self.avgdl))
-        score = idf * tf * (K1 + 1.0) / (tf + denom_dl)
-        cand = rows.select("rowid", "space", (-score).alias("score")).cache()
-        self._remember(cand)
-        total = cand.count()
-        capped = total > self.cap
-        total = min(total, self.cap)
-        if capped:
-            cand = cand.orderBy("rowid").limit(self.cap + 1)
-        out = cand.orderBy("score", "rowid").offset(offset).limit(limit)
-        return out, total, capped
+        return rows
 
     # ------------------------------------------------------------------
     def _respell(self, query: str) -> tuple[str, int, bool]:

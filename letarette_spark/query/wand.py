@@ -14,9 +14,11 @@ prune-then-verify plan.
       (term-pruned scan + rowid join), so the result is EXACT: any doc
       outside the candidate set has score upper bound < theta <= k-th best.
 
-Upper bound per block: idf_t * sat(w0*tf0_max + w1*tf1_max, dl_min) — the
-BM25 saturation term is increasing in tf and decreasing in dl, so block-max
-tf with block-min dl bounds every doc in the block.
+Upper bound per block: bm25(idf_t, w0*tf0_max + w1*tf1_max, dl_min) — the
+BM25 contribution is increasing in tf and decreasing in dl, so block-max
+tf with block-min dl bounds every doc in the block. Scoring goes through
+the executor's ``bm25``/``bm25_idf``, the same expressions every other
+path uses.
 
 Property-tested equal to exhaustive scoring in tests/test_wand.py; the
 Searcher routes eligible single-term queries through this path, so the
@@ -25,21 +27,18 @@ FTS5 rank-identity suite exercises it too.
 
 from __future__ import annotations
 
-import math
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from letarette_spark.index.blocks import blocks_df
 from letarette_spark.index.builder import BODY_WEIGHT, TITLE_WEIGHT, Index
 from letarette_spark.index.varbyte import decode_ints, decode_rowids
-
-K1 = 1.2
-B = 0.75
+from letarette_spark.query.executor import bm25, bm25_idf
 
 _DECODED = T.StructType(
     [
@@ -86,28 +85,24 @@ def _decode(blocks: DataFrame) -> DataFrame:
     return blocks.mapInPandas(dec, schema=_DECODED)
 
 
-def _sat(tf, dl, avgdl):
-    return tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / F.lit(avgdl)))
-
-
-def _term_idf(index: Index, terms: list[str], mode: str) -> dict[str, float] | None:
-    """FTS5-convention idf per term with 1e-6 clamp; None when the query
-    can have no hits (an AND over a missing term)."""
-    ndocs = int(index.meta["ndocs"])
+def _term_idf(
+    index: Index, terms: list[str], mode: str
+) -> tuple[list[str], Column] | None:
+    """The query terms with hits, and their idf as a Column over the row's
+    ``term``; None when the query can have no hits (an AND over a missing
+    term)."""
     stats = {
         r["term"]: int(r["df"])
         for r in index.term_stats().filter(F.col("term").isin(terms)).collect()
+        if r["df"]
     }
-    idf: dict[str, float] = {}
-    for t in terms:
-        n_t = stats.get(t, 0)
-        if n_t == 0:
-            if mode == "and":
-                return None
-            continue
-        v = math.log((ndocs - n_t + 0.5) / (n_t + 0.5))
-        idf[t] = v if v > 0.0 else 1e-6
-    return idf or None
+    if not stats or (mode == "and" and len(stats) < len(terms)):
+        return None
+    live_terms = sorted(stats)
+    n = F.create_map(
+        *[x for t in live_terms for x in (F.lit(t), F.lit(stats[t]))]
+    )[F.col("term")]
+    return live_terms, bm25_idf(n, int(index.meta["ndocs"]))
 
 
 def exhaustive_topk(
@@ -126,16 +121,11 @@ def exhaustive_topk(
     terms = sorted(set(terms))
     ndocs = int(index.meta["ndocs"])
     avgdl = float(index.meta["sum_dl"]) / ndocs if ndocs else 1.0
-    idf = _term_idf(index, terms, mode)
-    if not idf:
+    live = _term_idf(index, terms, mode)
+    if live is None:
         return spark.createDataFrame([], "rowid long, space string, score double")
-    live_terms = sorted(idf)
-    idf_col = F.create_map(
-        *[x for t in live_terms for x in (F.lit(t), F.lit(idf[t]))]
-    )[F.col("term")]
-    contrib = idf_col * _sat(
-        F.col("tf0") * w_title + F.col("tf1") * w_body, F.col("dl"), avgdl
-    )
+    live_terms, idf = live
+    contrib = bm25(idf, F.col("tf0") * w_title + F.col("tf1") * w_body, F.col("dl"), avgdl)
     exact = (
         index.postings_for_terms(live_terms)
         .select("rowid", "space", contrib.alias("c"), F.lit(1).alias("one"))
@@ -172,19 +162,16 @@ def wand_topk(
     ndocs = int(index.meta["ndocs"])
     avgdl = float(index.meta["sum_dl"]) / ndocs if ndocs else 1.0
 
-    idf = _term_idf(index, terms, mode)
-    if not idf:
+    live = _term_idf(index, terms, mode)
+    if live is None:
         return spark.createDataFrame([], "rowid long, space string, score double")
-    live_terms = sorted(idf)
+    live_terms, idf = live
 
-    idf_col = F.create_map(
-        *[x for t in live_terms for x in (F.lit(t), F.lit(idf[t]))]
-    )[F.col("term")]
     meta = (
         blocks_df(index)
         .filter(F.col("term").isin(live_terms))
         .withColumn("tfw_max", F.col("tf0_max") * w_title + F.col("tf1_max") * w_body)
-        .withColumn("ub", idf_col * _sat(F.col("tfw_max"), F.col("dl_min"), avgdl))
+        .withColumn("ub", bm25(idf, F.col("tfw_max"), F.col("dl_min"), avgdl))
         .cache()
     )
 
@@ -204,9 +191,7 @@ def wand_topk(
         F.col("rk") <= max(1, -(-k // block_size) + 1)
     )
     seeded = _decode(seed_blocks)
-    contrib = idf_col * _sat(
-        F.col("tf0") * w_title + F.col("tf1") * w_body, F.col("dl"), avgdl
-    )
+    contrib = bm25(idf, F.col("tf0") * w_title + F.col("tf1") * w_body, F.col("dl"), avgdl)
     seed_scores = seeded.select("term", "rowid", contrib.alias("c"), F.lit(1).alias("one"))
     agg = seed_scores.groupBy("rowid").agg(
         F.sum("c").alias("lb"), F.count("one").alias("nterms")

@@ -133,21 +133,49 @@ class TestNarrowSinglePhrase:
         exp = _expected_in_rowids(oracle, '"error"', in_space[:4])
         _assert_scores(got, exp, "capped error alpha")
 
-    def test_synonyms_agree_with_general_path(self, spaced, monkeypatch):
-        """Colocated-synonym tf (sum over alternative terms) must equal
-        the general path's merged-positions count."""
+    @pytest.mark.parametrize(
+        "query,spaces,synonyms,cap",
+        [
+            ("rotor", None, {}, None),
+            ("rotor", ["alpha"], {}, None),
+            ("rotor -wing", None, {}, None),
+            ("rotor", None, {"rotor": ["wing"]}, None),
+            ("error", ["alpha"], {}, 3),
+        ],
+        ids=["plain", "space", "exclude", "synonym", "capped"],
+    )
+    def test_narrow_read_agrees_with_positional_read(
+        self, spaced, monkeypatch, query, spaces, synonyms, cap
+    ):
+        """The narrow read (tf from the posting columns; synonym tf summed
+        over alternative terms) must give search_df's one query tail the
+        same rows as the positional read (_phrase_hits, merged positions).
+        WAND is switched off so the plain shape reaches both reads."""
         idx, _oracle, _sr = spaced
-        syn = {"rotor": ["wing"]}
-        s_narrow = Searcher(idx, stopwords=frozenset(), synonyms=syn)
-        s_general = Searcher(idx, stopwords=frozenset(), synonyms=syn)
+        kw = {} if cap is None else {"cap": cap}
+        s_narrow = Searcher(idx, stopwords=frozenset(), synonyms=synonyms, **kw)
+        s_positional = Searcher(idx, stopwords=frozenset(), synonyms=synonyms, **kw)
+        served = []
+        real_narrow = s_narrow._narrow_single_phrase
+
+        def narrow_read(*a):
+            served.append(real_narrow(*a))
+            return served[-1]
+
+        for s in (s_narrow, s_positional):
+            monkeypatch.setattr(s, "_wand_fast_path", lambda *a, **k: None)
+        monkeypatch.setattr(s_narrow, "_narrow_single_phrase", narrow_read)
         monkeypatch.setattr(
-            s_general, "_narrow_single_phrase", lambda *a, **k: None
+            s_positional, "_narrow_single_phrase", lambda *a, **k: None
         )
-        got_n, tot_n, _ = _got(s_narrow, "rotor")
-        got_g, tot_g, _ = _got(s_general, "rotor")
-        assert tot_n == tot_g and len(got_n) == len(got_g)
-        assert [r for r, _ in got_n] == [r for r, _ in got_g]
-        for (_, a), (_, b) in zip(got_n, got_g):
+        got_n, tot_n, cap_n = _got(s_narrow, query, spaces=spaces)
+        got_p, tot_p, cap_p = _got(s_positional, query, spaces=spaces)
+        assert len(served) == 1 and served[0] is not None
+        assert got_n, "shape must match some documents"
+        assert (tot_n, cap_n) == (tot_p, cap_p)
+        assert cap_n == (cap is not None)
+        assert [r for r, _ in got_n] == [r for r, _ in got_p]
+        for (_, a), (_, b) in zip(got_n, got_p):
             assert math.isclose(a, b, rel_tol=1e-12, abs_tol=1e-12)
 
 
